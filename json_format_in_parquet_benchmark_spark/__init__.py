@@ -20,6 +20,14 @@ Layout:
   operators/ - dedup, similarity, as-of join, multimodal plumbing
   plans/     - the query registry driving __spark_entry__ (query + oracle SQL)
   streaming/ - Structured Streaming variants (windowed aggs, sessionization)
+  zipimport_guard - stops each Python-UDF task re-reading pyspark.zip
+
+Importing the package installs the zipimport guard, so it is active on the
+driver and on every Python worker that unpickles an engine UDF.
 """
+
+from . import zipimport_guard
+
+zipimport_guard.install()
 
 __version__ = "0.1.0"

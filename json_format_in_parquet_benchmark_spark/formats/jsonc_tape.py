@@ -45,8 +45,10 @@ from __future__ import annotations
 
 import functools
 import json
+import weakref
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -218,7 +220,29 @@ def get_path_tape(nodes, strings, numbers, path):
     return cur.read()
 
 
-@functools.lru_cache(maxsize=1)
+def _per_context(build):
+    """Memoize a UDF builder per SparkContext.
+
+    A UDF object binds the Python accumulator of the SparkContext it is first
+    applied in; reused after that context stops, every task of the next one
+    logs "Failed to update accumulator".  Within one context the same object
+    is returned, so plans are unchanged."""
+    by_context = weakref.WeakKeyDictionary()
+
+    @functools.wraps(build)
+    def get(*args):
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            return build(*args)
+        udfs = by_context.setdefault(sc, {})
+        if args not in udfs:
+            udfs[args] = build(*args)
+        return udfs[args]
+
+    return get
+
+
+@_per_context
 def _encode_udf():
     # built lazily: pandas_udf registration needs an active SparkSession
     @pandas_udf(TAPE_SCHEMA)
@@ -235,7 +259,7 @@ def _encode_udf():
     return encode_udf
 
 
-@functools.lru_cache(maxsize=32)
+@_per_context
 def get_path_udf(path: tuple[str, ...]):
     """Pandas UDF extracting ``path`` from tape columns as a string (strings
     come back raw, other values as compact JSON).
@@ -264,7 +288,7 @@ def get_path_udf(path: tuple[str, ...]):
     return _udf
 
 
-@functools.lru_cache(maxsize=1)
+@_per_context
 def _decode_udf():
     @pandas_udf("string")
     def decode_udf(

@@ -103,17 +103,3 @@ def dsum_duck(expr: str, alias: str, scale: int = 2, prec: int = 38) -> str:
     return (
         f"CAST(SUM(CAST({expr} AS DECIMAL({prec},{scale}))) AS DOUBLE) AS {alias}"
     )
-
-
-def davg_spark(expr: str, alias: str, scale: int = 6, prec: int = 38) -> str:
-    return (
-        f"cast(sum(cast({expr} as decimal({prec},{scale}))) as double)"
-        f" / count({expr}) as {alias}"
-    )
-
-
-def davg_duck(expr: str, alias: str, scale: int = 6, prec: int = 38) -> str:
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL({prec},{scale}))) AS DOUBLE)"
-        f" / COUNT({expr}) AS {alias}"
-    )

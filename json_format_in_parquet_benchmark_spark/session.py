@@ -12,6 +12,16 @@ config choice is made for a real multi-executor cluster at ~100 TB:
 - Broadcast threshold left at default 10 MB; dimension tables (region, nation,
   part, supplier at any SF that matters) broadcast automatically, and the
   query code additionally hints ``broadcast()`` where the stats may be absent.
+
+Python-worker per-task cost: every Python-UDF task starts with
+``importlib.invalidate_caches()`` (``pyspark.worker_util.setup_spark_files``).
+Before Python 3.13 that re-reads the whole directory of ``pyspark.zip``
+(~27k entries) once per zip importer, about 0.2 s per task even on a reused
+worker -- more than a small UDF query's own work.  Importing this package
+installs ``zipimport_guard``, which skips the re-read while the archive's
+mtime and size are unchanged; a worker pays it once, on the first task that
+unpickles an engine UDF.  On Python >= 3.13 the re-read is already lazy and
+the guard is a no-op.
 """
 
 from __future__ import annotations

@@ -7,6 +7,8 @@ Intercepts DataFrameWriter.parquet, dumps the writer's source-frame plan to
 <out_dir>/<query>_write<N>_<suffix>.txt, then performs the real write.
 
 Usage: python scripts/dump_r11_write_plans.py <out_dir> <suffix> <sf_dir> name [name ...]
+
+Exits 1 if any named query is unknown, raises, or has no write captured.
 """
 
 from __future__ import annotations
@@ -54,16 +56,19 @@ def main() -> None:
     _STATE["out_dir"], _STATE["suffix"] = out_dir, suffix
     rw.DataFrameWriter.parquet = _capturing_parquet
     spark = get_spark(app_name="jfipb-r11-write-plans")
+    failed = False
     for name in names:
         q = REGISTRY.get(name)
         if q is None:
-            print(f"SKIP {name}: not in registry", file=sys.stderr)
+            print(f"ERROR {name}: not in registry", file=sys.stderr)
+            failed = True
             continue
         _STATE["query"], _STATE["n"] = name, 0
         try:
             q.fn(spark, sf_dir).collect()
         except Exception as exc:
             print(f"ERROR {name}: {exc}", file=sys.stderr)
+            failed = True
         # Evidence-completeness guard (ADVICE r11): only
         # DataFrameWriter.parquet is intercepted, so a query writing via
         # .save()/.saveAsTable()/another format would be silently
@@ -78,8 +83,11 @@ def main() -> None:
                 "evidence run",
                 file=sys.stderr,
             )
+            failed = True
         release_caches()
     spark.stop()
+    if failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
