@@ -164,65 +164,6 @@ def minhash_signatures(
     return sh.groupBy("doc_id").agg(*aggs, F.count(F.lit(1)).alias("n_sh"))
 
 
-def minhash_signatures_arrow(docsets: DataFrame, k: int = 16) -> DataFrame:
-    """Single-pass Arrow kernel for the MinHash signature stage: one row per
-    doc with k MinHash components m0..m{k-1}, bit-identical to the
-    explode+groupBy form in :func:`minhash_signatures`.
-
-    ``docsets`` is the persisted (doc_id, shset) frame every MinHash
-    pipeline already materializes.  Because the shingle set is ALREADY
-    per-doc, the signature needs no shuffle at all -- each ``mapInArrow``
-    task hands its record batches to an embedded DuckDB which computes the
-    identical portable hash (md5 hex -> 60-bit BIGINT -> mod P31) and all k
-    universal-hash mins natively in one vectorized pass.  DuckDB's md5 is
-    the SAME byte-identical digest the oracle relies on (functions.hashing
-    module docstring), so the signatures -- and therefore the band hashes
-    and the final verified pair set -- are bit-equal to the JVM form
-    (pinned by tests/test_properties.py and the interleaved probe in
-    scripts/probe_minhash_kernel.py).
-
-    Docs with NULL or empty shingle sets emit no row, matching explode()'s
-    drop behavior (DuckDB unnest does the same).
-    """
-    from ..functions.hashing import P31, perm_consts
-
-    id_type = docsets.schema["doc_id"].dataType.simpleString()
-    out_schema = f"doc_id {id_type}, " + ", ".join(
-        f"m{j} bigint" for j in range(k)
-    )
-    sig_cols = ", ".join(
-        f"MIN(({a} * h + {b}) % {P31}) AS m{j}"
-        for j, (a, b) in enumerate(perm_consts(k))
-    )
-    query = f"""
-        SELECT doc_id, {sig_cols}
-        FROM (
-          SELECT doc_id,
-                 ('0x' || substr(md5(sh), 1, 15))::BIGINT % {P31} AS h
-          FROM (SELECT doc_id, unnest(shset) AS sh FROM batch_tbl)
-        )
-        GROUP BY doc_id
-    """
-
-    def kernel(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()  # once per task (guide 4.5)
-        # One DuckDB thread per Spark task: the task slots ARE the
-        # parallelism; 32 tasks x default-32 DuckDB threads would
-        # oversubscribe the box 32x and thrash.
-        con.execute("PRAGMA threads=1")
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            con.register("batch_tbl", tbl)
-            out = con.execute(query).arrow()
-            con.unregister("batch_tbl")
-            yield from out.to_batches()
-
-    return docsets.select("doc_id", "shset").mapInArrow(kernel, out_schema)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,

@@ -30,18 +30,24 @@ def diff(prev_path: str, curr_path: str) -> str:
 
     added = sorted(set(ph_curr) - set(ph_prev))
     removed = sorted(set(ph_prev) - set(ph_curr))
-    changed = sorted(
-        q for q in set(ph_curr) & set(ph_prev) if ph_curr[q] != ph_prev[q]
-    )
-    same = sorted(
-        q for q in set(ph_curr) & set(ph_prev) if ph_curr[q] == ph_prev[q]
-    )
+    common = set(ph_curr) & set(ph_prev)
+    # bench.py records a fingerprint it could not compute as "err": two
+    # errors are not an unchanged plan, and one error is not a plan change.
+    errored = sorted(q for q in common if "err" in (ph_prev[q], ph_curr[q]))
+    common -= set(errored)
+    changed = sorted(q for q in common if ph_curr[q] != ph_prev[q])
+    same = sorted(q for q in common if ph_curr[q] == ph_prev[q])
 
     out = [f"Plan-hash diff: {prev_path} -> {curr_path}", ""]
     out.append(
         f"- unchanged: {len(same)}, changed: {len(changed)}, "
-        f"new: {len(added)}, dropped: {len(removed)}"
+        f"errored: {len(errored)}, new: {len(added)}, dropped: {len(removed)}"
     )
+    if errored:
+        out.append(
+            "- errored (no fingerprint, old -> new): "
+            + ", ".join(f"`{q}` ({ph_prev[q]} -> {ph_curr[q]})" for q in errored)
+        )
     if changed:
         out.append("- changed (old time -> new time, s):")
         for q in changed:

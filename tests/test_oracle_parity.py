@@ -59,3 +59,44 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert set(e.oracle_sql()) <= set(e.queries())
+
+
+def test_queries_follow_evidence_order():
+    import os
+
+    import __spark_entry__ as e
+
+    names = list(e.queries())
+    assert len(names) == len(REGISTRY) == 294
+    assert set(names) == set(REGISTRY)
+    assert e.oracle_sql() == {
+        n: q.oracle for n, q in REGISTRY.items() if q.oracle is not None
+    }
+    last = e.last_green_rounds(os.path.dirname(e.__file__))
+    rounds = [last.get(n, 0) for n in names]
+    assert rounds == sorted(rounds)
+
+
+def test_evidence_order_rule(tmp_path):
+    import json
+
+    import __spark_entry__ as e
+
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "spark_rows": 1, "oracle_rows": 1, "err": None}
+    failed = dict(green, hash_match=False)
+    names = ["a", "b", "c", "d", "e"]
+    assert e.evidence_order(names, str(tmp_path)) == names
+
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"a": green, "b": green, "c": failed})
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({"b": green, "d": dict(green, err="boom")})
+    )
+    (tmp_path / "CORRECTNESS_r02_notes.json").write_text("not evidence")
+    # c's only entry failed and d's errored: they sort with never-verified e
+    assert e.evidence_order(names, str(tmp_path)) == ["c", "d", "e", "a", "b"]
+
+    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps({"c": green}))
+    assert e.evidence_order(names, str(tmp_path)) == ["d", "e", "a", "b", "c"]
